@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   /** One query's timed-pass record: the median rep's wall seconds plus
@@ -85,21 +84,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Static conf, read at session creation. The default 100-entry
-      // generated-class cache cannot hold a 136-query suite: every full
-      // pass evicts everything, so every pass re-generates, re-Janino-
-      // compiles, and re-JITs each query's codegen classes — the class
-      // churn behind the round-10 late-alphabet sweep inflation (x9
-      // 17.9 s in-sweep vs 4.3 s isolated at sf10, same code). 2048
-      // entries hold all passes' classes for the foreseeable suite.
-      .config("spark.sql.codegen.cache.maxEntries", "2048")
-      .getOrCreate()
+    val spark = Util.localSession()
     spark.sparkContext.setLogLevel("WARN")
     // Steady-state measurement: one untimed pass first (JIT compilation,
     // codegen cache, parquet footers), then the timed pass. Both passes
@@ -536,7 +521,10 @@ object Bench {
     // detail file. Tail-safe by construction — the totals line stays
     // last and small, so even if a bounded tail capture cuts the ~8 KB
     // queries line's head, the line the driver parses is untouched.
-    val queriesLine = s"""{"metric":"queries","sf":"$sfDir","queries":${toJson(results.map(r => r.name -> r.sec))}}"""
+    // a non-finite time would print as NaN/Infinity, which is not JSON:
+    // it takes the -1.0 failure sentinel instead
+    val queriesLine = s"""{"metric":"queries","sf":"$sfDir","queries":${toJson(results.map(r =>
+      r.name -> (if (r.sec.isNaN || r.sec.isInfinite) -1.0 else r.sec)))}}"""
     spark.stop()
     System.err.println("[bench] full record written to " + outFile)
     println("BENCH_QUERIES: " + queriesLine)

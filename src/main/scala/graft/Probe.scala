@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc optimization diagnostics (round 17): small named probes that
@@ -30,13 +29,7 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val probe = args.headOption.getOrElse("m6_buckets")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Util.localSession()
     spark.sparkContext.setLogLevel("WARN")
     probe match {
       case "m6_buckets" =>

@@ -5,6 +5,27 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, TimestampNTZType, TimestampType}
 
 object Util {
+  /** Cores of the local-mode session: `SPARK_GRAFT_CPUS`, default 4. */
+  def localCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The session every local harness main (Bench, Verify, Explain, Probe,
+    * Smoke, ScaleData) runs on: `local[localCores]` with as many shuffle
+    * partitions, UTC, no UI. */
+  def localSession(): SparkSession = SparkSession.builder()
+    .master(s"local[$localCores]")
+    .config("spark.sql.shuffle.partitions", localCores.toString)
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    // Static conf, read at session creation. The default 100-entry
+    // generated-class cache cannot hold a 136-query suite: every full
+    // pass evicts everything, so every pass re-generates, re-Janino-
+    // compiles, and re-JITs each query's codegen classes — the class
+    // churn behind late-alphabet inflation in full sweeps (x9 17.9 s
+    // in-sweep vs 4.3 s isolated at sf10, same code). 2048
+    // entries hold all passes' classes for the foreseeable suite.
+    .config("spark.sql.codegen.cache.maxEntries", "2048")
+    .getOrCreate()
+
   /** Round every DoubleType column to `scale` decimals. Applied to both
     * sides of the DuckDB-oracle compare so order-dependent floating-point
     * summation cannot flip a hash match. */

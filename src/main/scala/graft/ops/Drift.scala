@@ -1,9 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import graft.tableone.RangePrefix
 
 /** Distribution-drift measures between a REFERENCE corpus (what the
   * model was trained/validated on) and a CURRENT corpus (what the
@@ -191,21 +191,6 @@ object Drift {
         sum(col("__term")).as("psi"))
   }
 
-  /** Exact two-sample KS statistic: `sup_v |F_ref(v) − F_cur(v)|`,
-    * evaluated at every distinct value of either sample (where the sup
-    * of two step functions lives). Returns ONE row:
-    * (ks, at_value, n_ref, n_cur) — `at_value` the SMALLEST value
-    * attaining the sup, so ties have a total order.
-    *
-    * Scale shape: the corpus reduces to a per-distinct-value count
-    * pair (one map-side-combined aggregate over the tagged union —
-    * the shuffle carries distinct values, not rows); the cumulative
-    * sums that form both CDFs run INSIDE range partitions (window
-    * partitioned by partition id), stitched with driver prefix offsets
-    * of ≤ #partitions rows — the same construction as
-    * [[Quantiles.groupedQuantilesExact]], so no single-partition
-    * global window ever materializes. The final sup is a top-1
-    * TakeOrderedAndProject. */
   /** Exact 1-D Wasserstein-1 distance (earth-mover's) between the two
     * samples' empirical distributions: W₁ = ∫|F_ref(v) − F_cur(v)| dv —
     * the drift measure that weights HOW FAR mass moved, where KS only
@@ -213,64 +198,37 @@ object Drift {
     * pooled distinct values v₁<…<v_m this is
     * Σᵢ |F_ref(vᵢ) − F_cur(vᵢ)| · (vᵢ₊₁ − vᵢ).
     *
-    * Scale shape: the [[ksStatistic]] construction exactly — one
-    * map-side-combined (value, n_ref, n_cur) census, range-partitioned
-    * cumulative counts stitched with driver prefix offsets (≤
-    * #partitions rows collected), plus one extra ≤#partitions-sized
-    * driver map carrying each partition's successor value so the
+    * Scale shape: the [[ksStatistic]] census and range pass
+    * ([[RangePrefix.withRangePrefix]]) with each partition's minimum
+    * value as an extra subtotal, feeding one ≤#partitions-sized driver
+    * map carrying each partition's successor value so the
     * `lead` at partition edges never needs a global window. Every term
     * folds as DECIMAL(38,6) off exact long counts and 6-dp-quantized
     * values, so the sum is order-independent and an external engine
     * replays it bit-for-bit; the single double division by
     * n_ref·n_cur happens once on the final row.
     * Returns one row: (w1, n_ref, n_cur). */
-  def wasserstein1(ref: DataFrame, cur: DataFrame, valueCol: String): DataFrame = {
-    val spark = ref.sparkSession
-    def side(df: DataFrame, r: Long, c: Long): DataFrame =
-      df.select(col(valueCol).cast("decimal(18,6)").as("v"))
-        .filter(col("v").isNotNull)
-        .select(col("v"), lit(r).as("r"), lit(c).as("c"))
-    val counts = side(ref, 1L, 0L).unionByName(side(cur, 0L, 1L))
-      .groupBy("v").agg(sum("r").as("n_ref"), sum("c").as("n_cur"))
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val pre = counts.persist()
-    val parts = pre.repartitionByRange(nParts, col("v"))
-      .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    try {
-      val subtotals = parts.groupBy("pid")
-        .agg(sum("n_ref").as("tr"), sum("n_cur").as("tc"), min("v").as("mv"))
-        .collect().map(r => (r.getAs[Int]("pid"), r.getAs[Long]("tr"),
-          r.getAs[Long]("tc"), r.getAs[java.math.BigDecimal]("mv")))
-        .sortBy(_._1)
-      val nRef = subtotals.map(_._2).sum
-      val nCur = subtotals.map(_._3).sum
+  def wasserstein1(ref: DataFrame, cur: DataFrame, valueCol: String): DataFrame =
+    withValueCensus(ref, cur, valueCol, "decimal(18,6)")(min("v").as("mv")) { pass =>
+      val spark = ref.sparkSession
+      val (nRef, nCur) = (pass.total("n_ref"), pass.total("n_cur"))
       require(nRef > 0 && nCur > 0,
         s"wasserstein1 needs non-null values on both sides (ref=$nRef, cur=$nCur)")
-      val offR = subtotals.scanLeft(0L)(_ + _._2).init
-      val offC = subtotals.scanLeft(0L)(_ + _._3).init
-      val offRMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offR(i)))): _*)
-      val offCMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offC(i)))): _*)
       // each partition's last row needs its SUCCESSOR value, which lives
       // in the next non-empty partition — a ≤#partitions driver map
-      val nextV: Map[Int, java.math.BigDecimal] = subtotals.indices.init.map { i =>
-        subtotals(i)._1 -> subtotals(i + 1)._4
+      val st = pass.subtotals
+      val nextV: Map[Int, java.math.BigDecimal] = st.indices.init.map { i =>
+        st(i).getAs[Int](RangePrefix.Pid) -> st(i + 1).getAs[java.math.BigDecimal]("mv")
       }.toMap
       val nextVMap =
         if (nextV.isEmpty) map()
         else map(nextV.toSeq.flatMap { case (p, v) =>
           Seq(lit(p), lit(v).cast("decimal(18,6)")) }: _*)
-      val w = Window.partitionBy("pid").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wLead = Window.partitionBy("pid").orderBy("v")
-      val gap = coalesce(lead(col("v"), 1).over(wLead),
-        element_at(nextVMap, col("pid"))) - col("v")
-      val total = parts
-        .withColumn("cr", sum("n_ref").over(w) + element_at(offRMap, col("pid")))
-        .withColumn("cc", sum("n_cur").over(w) + element_at(offCMap, col("pid")))
+      val gap = coalesce(lead(col("v"), 1).over(pass.inPartition),
+        element_at(nextVMap, col(RangePrefix.Pid))) - col("v")
+      val total = pass.parts
+        .withColumn("cr", pass.runningSum("n_ref"))
+        .withColumn("cc", pass.runningSum("n_cur"))
         .withColumn("__term",
           // decimal cross-products: long·long would overflow past ~3e9
           // rows per side, and the decimal fold keeps the sum exact
@@ -284,7 +242,23 @@ object Drift {
         .head()
       import spark.implicits._
       Seq((total.getDouble(0), nRef, nCur)).toDF("w1", "n_ref", "n_cur")
-    } finally { parts.unpersist(); pre.unpersist() }
+    }
+
+  /** Both samples as a tagged union reduced to one (v, n_ref, n_cur) row
+    * per distinct value (map-side-combined: the shuffle carries distinct
+    * values, not rows), run through [[RangePrefix.withRangePrefix]] on v
+    * with both counts — plus `extra` — as partition subtotals. */
+  private def withValueCensus[T](ref: DataFrame, cur: DataFrame, valueCol: String,
+                                 valueType: String)(extra: Column*)
+                                (use: RangePrefix.Ranged => T): T = {
+    def side(df: DataFrame, r: Long, c: Long): DataFrame =
+      df.select(col(valueCol).cast(valueType).as("v"))
+        .filter(col("v").isNotNull)
+        .select(col("v"), lit(r).as("r"), lit(c).as("c"))
+    val counts = side(ref, 1L, 0L).unionByName(side(cur, 0L, 1L))
+      .groupBy("v").agg(sum("r").as("n_ref"), sum("c").as("n_cur"))
+    RangePrefix.withRangePrefix(counts, Seq("v"))(
+      sum("n_ref").as("n_ref") +: sum("n_cur").as("n_cur") +: extra: _*)(use)
   }
 
   /** Categorical drift: the chi-square homogeneity test of the 2×g
@@ -394,46 +368,31 @@ object Drift {
         "var_trace_ref", "var_trace_cur")
   }
 
-  def ksStatistic(ref: DataFrame, cur: DataFrame, valueCol: String): DataFrame = {
-    val spark = ref.sparkSession
-    def side(df: DataFrame, r: Long, c: Long): DataFrame =
-      df.select(col(valueCol).cast(DoubleType).as("v"))
-        .filter(col("v").isNotNull)
-        .select(col("v"), lit(r).as("r"), lit(c).as("c"))
-    val counts = side(ref, 1L, 0L).unionByName(side(cur, 0L, 1L))
-      .groupBy("v").agg(sum("r").as("n_ref"), sum("c").as("n_cur"))
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // persist before repartitionByRange: the range sampler plus the two
-    // downstream actions would otherwise recompute the aggregate, and
-    // the offsets contract needs ONE stable set of range boundaries
-    val pre = counts.persist()
-    val parts = pre.repartitionByRange(nParts, col("v"))
-      .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    try {
-      val subtotals = parts.groupBy("pid")
-        .agg(sum("n_ref").as("tr"), sum("n_cur").as("tc"))
-        .collect().map(r => (r.getAs[Int]("pid"),
-          r.getAs[Long]("tr"), r.getAs[Long]("tc"))).sortBy(_._1)
-      val nRef = subtotals.map(_._2).sum
-      val nCur = subtotals.map(_._3).sum
+  /** Exact two-sample KS statistic: `sup_v |F_ref(v) − F_cur(v)|`,
+    * evaluated at every distinct value of either sample (where the sup
+    * of two step functions lives). Returns ONE row:
+    * (ks, at_value, n_ref, n_cur) — `at_value` the SMALLEST value
+    * attaining the sup, so ties have a total order.
+    *
+    * Scale shape: the corpus reduces to a per-distinct-value count
+    * pair (one map-side-combined aggregate over the tagged union —
+    * the shuffle carries distinct values, not rows); the cumulative
+    * sums that form both CDFs are running sums of the shared range pass
+    * ([[RangePrefix.withRangePrefix]]: windows inside range partitions
+    * stitched with driver prefix offsets of ≤ #partitions rows), so no
+    * single-partition global window ever materializes. The final sup is
+    * a top-1 TakeOrderedAndProject. */
+  def ksStatistic(ref: DataFrame, cur: DataFrame, valueCol: String): DataFrame =
+    withValueCensus(ref, cur, valueCol, "double")() { pass =>
+      val spark = ref.sparkSession
+      val (nRef, nCur) = (pass.total("n_ref"), pass.total("n_cur"))
       require(nRef > 0 && nCur > 0,
         s"ksStatistic needs non-null values on both sides (ref=$nRef, cur=$nCur)")
-      // driver prefix offsets per partition id (≤ #partitions entries)
-      val offR = subtotals.scanLeft(0L)(_ + _._2).init
-      val offC = subtotals.scanLeft(0L)(_ + _._3).init
-      val offRMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offR(i)))): _*)
-      val offCMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offC(i)))): _*)
-      val w = Window.partitionBy("pid").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // the sup is ONE row — materialize it inside the cache scope so
-      // the persists can be released here, not by the caller
-      val top = parts
-        .withColumn("cr", sum("n_ref").over(w) + element_at(offRMap, col("pid")))
-        .withColumn("cc", sum("n_cur").over(w) + element_at(offCMap, col("pid")))
+      // the sup is ONE row — materialize it inside the pass's scope, whose
+      // persists are released on return
+      val top = pass.parts
+        .withColumn("cr", pass.runningSum("n_ref"))
+        .withColumn("cc", pass.runningSum("n_cur"))
         .withColumn("diff",
           abs(col("cr").cast(DoubleType) / lit(nRef.toDouble) -
             col("cc").cast(DoubleType) / lit(nCur.toDouble)))
@@ -444,6 +403,5 @@ object Drift {
       import spark.implicits._
       Seq((top.getDouble(0), top.getDouble(1), nRef, nCur))
         .toDF("ks", "at_value", "n_ref", "n_cur")
-    } finally { parts.unpersist(); pre.unpersist() }
-  }
+    }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import graft.tableone.RangePrefix
 
 /** Model-evaluation statistics at corpus scale — the scoring half of a
   * training pipeline (score a candidate filter/classifier over the full
@@ -27,13 +28,32 @@ object Evaluation {
     *
     * Scale shape: the corpus reduces to one (score → nPos, nNeg) row
     * per DISTINCT score (map-side-combined aggregate); the strictly-
-    * below negative counts come from range-partitioned within-partition
-    * window cumsums stitched with ≤ #partitions driver prefix offsets —
-    * the [[Quantiles.groupedQuantilesExact]] construction, so no
+    * below negative counts are running sums of the shared range pass
+    * ([[RangePrefix.withRangePrefix]]: within-partition window cumsums
+    * stitched with ≤ #partitions driver prefix offsets), so no
     * single-partition global ranking window ever materializes. Returns
     * ONE row (auc, n_pos, n_neg). */
-  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
-    val spark = df.sparkSession
+  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
+    withScoreCensus(df, scoreCol, labelCol) { pass =>
+      val spark = df.sparkSession
+      val (nPos, nNeg) = (pass.total("n_pos"), pass.total("n_neg"))
+      require(nPos > 0 && nNeg > 0,
+        s"rocAuc needs both classes present (pos=$nPos, neg=$nNeg)")
+      val num = pass.parts
+        .withColumn("neg_below", pass.runningSum("n_neg") - col("n_neg"))
+        .agg(sum((col("neg_below") * 2L + col("n_neg")).cast(DecimalType(38, 0)) *
+          col("n_pos").cast(DecimalType(38, 0))).as("num2"))
+        .head().getDecimal(0)
+      import spark.implicits._
+      Seq((num.doubleValue() / (2.0 * nPos.toDouble * nNeg.toDouble), nPos, nNeg))
+        .toDF("auc", "n_pos", "n_neg")
+    }
+
+  /** The corpus reduced to one (v, n_pos, n_neg) row per distinct score
+    * (map-side-combined), run through [[RangePrefix.withRangePrefix]] on
+    * v with both class counts as subtotals. */
+  private def withScoreCensus[T](df: DataFrame, scoreCol: String, labelCol: String)
+                                (use: RangePrefix.Ranged => T): T = {
     val counts = df
       .select(col(scoreCol).cast(DoubleType).as("v"),
         col(labelCol).cast("long").as("y"))
@@ -41,41 +61,8 @@ object Evaluation {
       .groupBy("v").agg(
         sum(when(col("y") =!= 0L, 1L).otherwise(0L)).as("n_pos"),
         sum(when(col("y") === 0L, 1L).otherwise(0L)).as("n_neg"))
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // persist before repartitionByRange: the range sampler and the two
-    // downstream actions must all see ONE stable aggregate (the same
-    // offsets contract as ksStatistic)
-    val pre = counts.persist()
-    val parts = pre.repartitionByRange(nParts, col("v"))
-      .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    try {
-      val subtotals = parts.groupBy("pid")
-        .agg(sum("n_pos").as("tp"), sum("n_neg").as("tn"))
-        .collect().map(r => (r.getAs[Int]("pid"),
-          r.getAs[Long]("tp"), r.getAs[Long]("tn"))).sortBy(_._1)
-      val nPos = subtotals.map(_._2).sum
-      val nNeg = subtotals.map(_._3).sum
-      require(nPos > 0 && nNeg > 0,
-        s"rocAuc needs both classes present (pos=$nPos, neg=$nNeg)")
-      val offN = subtotals.scanLeft(0L)(_ + _._3).init
-      val offNMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offN(i)))): _*)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("pid").orderBy("v")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      val num = parts
-        .withColumn("neg_below",
-          sum("n_neg").over(w) + element_at(offNMap, col("pid")) - col("n_neg"))
-        .agg(sum((col("neg_below") * 2L + col("n_neg")).cast(DecimalType(38, 0)) *
-          col("n_pos").cast(DecimalType(38, 0))).as("num2"))
-        .head().getDecimal(0)
-      import spark.implicits._
-      Seq((num.doubleValue() / (2.0 * nPos.toDouble * nNeg.toDouble), nPos, nNeg))
-        .toDF("auc", "n_pos", "n_neg")
-    } finally { parts.unpersist(); pre.unpersist() }
+    RangePrefix.withRangePrefix(counts, Seq("v"))(
+      sum("n_pos").as("n_pos"), sum("n_neg").as("n_neg"))(use)
   }
 
   /** ROC-AUC with its DeLong (1988) sampling variance and normal CI —
@@ -94,49 +81,19 @@ object Evaluation {
     * five-number algebra on driver scalars (the D1 contract: only
     * aggregates reach the driver). Returns ONE row (n_pos, n_neg, auc,
     * var_auc, se_auc, ci_lo, ci_hi); requires ≥ 2 of each class. */
-  def aucDeLong(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val counts = df
-      .select(col(scoreCol).cast(DoubleType).as("v"),
-        col(labelCol).cast("long").as("y"))
-      .filter(col("v").isNotNull && col("y").isNotNull)
-      .groupBy("v").agg(
-        sum(when(col("y") =!= 0L, 1L).otherwise(0L)).as("n_pos"),
-        sum(when(col("y") === 0L, 1L).otherwise(0L)).as("n_neg"))
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val pre = counts.persist()
-    val parts = pre.repartitionByRange(nParts, col("v"))
-      .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    try {
-      val subtotals = parts.groupBy("pid")
-        .agg(sum("n_pos").as("tp"), sum("n_neg").as("tn"))
-        .collect().map(r => (r.getAs[Int]("pid"),
-          r.getAs[Long]("tp"), r.getAs[Long]("tn"))).sortBy(_._1)
-      val nPos = subtotals.map(_._2).sum
-      val nNeg = subtotals.map(_._3).sum
+  def aucDeLong(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
+    withScoreCensus(df, scoreCol, labelCol) { pass =>
+      val spark = df.sparkSession
+      val (nPos, nNeg) = (pass.total("n_pos"), pass.total("n_neg"))
       require(nPos >= 2 && nNeg >= 2,
         s"aucDeLong needs >= 2 of each class (pos=$nPos, neg=$nNeg)")
-      val offN = subtotals.scanLeft(0L)(_ + _._3).init
-      val offP = subtotals.scanLeft(0L)(_ + _._2).init
-      val offNMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offN(i)))): _*)
-      val offPMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offP(i)))): _*)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("pid").orderBy("v")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
       val v10 = (col("neg_below").cast(DoubleType) +
         lit(0.5) * col("n_neg").cast(DoubleType)) / lit(nNeg.toDouble)
       val v01 = ((lit(nPos) - col("pos_below") - col("n_pos")).cast(DoubleType) +
         lit(0.5) * col("n_pos").cast(DoubleType)) / lit(nPos.toDouble)
-      val m = parts
-        .withColumn("neg_below",
-          sum("n_neg").over(w) + element_at(offNMap, col("pid")) - col("n_neg"))
-        .withColumn("pos_below",
-          sum("n_pos").over(w) + element_at(offPMap, col("pid")) - col("n_pos"))
+      val m = pass.parts
+        .withColumn("neg_below", pass.runningSum("n_neg") - col("n_neg"))
+        .withColumn("pos_below", pass.runningSum("n_pos") - col("n_pos"))
         .withColumn("__v10", v10).withColumn("__v01", v01)
         .agg(
           sum(col("n_pos").cast(DoubleType) * col("__v10")).as("sw10"),
@@ -155,8 +112,7 @@ object Evaluation {
       import spark.implicits._
       Seq((nPos, nNeg, auc, varAuc, se, auc - 1.96 * se, auc + 1.96 * se))
         .toDF("n_pos", "n_neg", "auc", "var_auc", "se_auc", "ci_lo", "ci_hi")
-    } finally { parts.unpersist(); pre.unpersist() }
-  }
+    }
 
   /** Exact precision-recall AUC (trapezoidal) — the class-imbalance
     * companion to [[rocAuc]]: with 0.1% positives, a model can hold
@@ -178,50 +134,20 @@ object Evaluation {
     * one final 1-row aggregate. Returns ONE row
     * (pr_auc, baseline, n_pos, n_neg); baseline = P/(P+N) is the
     * no-skill precision the AUC should be read against. */
-  def prAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val counts = df
-      .select(col(scoreCol).cast(DoubleType).as("v"),
-        col(labelCol).cast("long").as("y"))
-      .filter(col("v").isNotNull && col("y").isNotNull)
-      .groupBy("v").agg(
-        sum(when(col("y") =!= 0L, 1L).otherwise(0L)).as("n_pos"),
-        sum(when(col("y") === 0L, 1L).otherwise(0L)).as("n_neg"))
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val pre = counts.persist()
-    val parts = pre.repartitionByRange(nParts, col("v"))
-      .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    try {
-      val subtotals = parts.groupBy("pid")
-        .agg(sum("n_pos").as("tp"), sum("n_neg").as("tn"))
-        .collect().map(r => (r.getAs[Int]("pid"),
-          r.getAs[Long]("tp"), r.getAs[Long]("tn"))).sortBy(_._1)
-      val nPos = subtotals.map(_._2).sum
-      val nNeg = subtotals.map(_._3).sum
+  def prAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
+    withScoreCensus(df, scoreCol, labelCol) { pass =>
+      val spark = df.sparkSession
+      val (nPos, nNeg) = (pass.total("n_pos"), pass.total("n_neg"))
       require(nPos > 0 && nNeg > 0,
         s"prAuc needs both classes present (pos=$nPos, neg=$nNeg)")
-      val offP = subtotals.scanLeft(0L)(_ + _._2).init
-      val offN = subtotals.scanLeft(0L)(_ + _._3).init
-      val offPMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offP(i)))): _*)
-      val offNMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offN(i)))): _*)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("pid").orderBy("v")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      val tp = (lit(nPos) - (sum("n_pos").over(w) +
-        element_at(offPMap, col("pid")) - col("n_pos"))).cast(DoubleType)
-      val fp = (lit(nNeg) - (sum("n_neg").over(w) +
-        element_at(offNMap, col("pid")) - col("n_neg"))).cast(DoubleType)
+      val tp = (lit(nPos) - (pass.runningSum("n_pos") - col("n_pos"))).cast(DoubleType)
+      val fp = (lit(nNeg) - (pass.runningSum("n_neg") - col("n_neg"))).cast(DoubleType)
       val tpPrev = tp - col("n_pos").cast(DoubleType)
       val fpPrev = fp - col("n_neg").cast(DoubleType)
       val prec = tp / (tp + fp)
       val precPrev = when(tpPrev + fpPrev > 0, tpPrev / (tpPrev + fpPrev))
         .otherwise(lit(1.0))
-      val auc = parts
+      val auc = pass.parts
         .withColumn("__term",
           col("n_pos").cast(DoubleType) / lit(nPos.toDouble) *
             (prec + precPrev) / lit(2.0))
@@ -230,8 +156,7 @@ object Evaluation {
       import spark.implicits._
       Seq((auc, nPos.toDouble / (nPos + nNeg).toDouble, nPos, nNeg))
         .toDF("pr_auc", "baseline", "n_pos", "n_neg")
-    } finally { parts.unpersist(); pre.unpersist() }
-  }
+    }
 
   /** Decile lift / gains table — the campaign-targeting readout: cut
     * the population into k equal-frequency score bins (edges from the

@@ -4,9 +4,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import graft.tableone.RangePrefix
 
-/** One (group, value) histogram row of the range-partitioned pick pass. */
-private[ops] case class QHistRow(g: String, v: Double, cnt: Long, pid: Int)
+/** One (group, value) histogram row of the range-partitioned pick pass,
+  * with its range-partition id ([[graft.tableone.RangePrefix.Pid]]). */
+private[ops] case class QHistRow(g: String, v: Double, cnt: Long, __pid: Int)
 
 /** One emitted order-statistic pick: the `rank`-th smallest value of
   * group `g` (1-indexed over the group's non-null values). */
@@ -31,14 +33,15 @@ private[ops] case class QPick(g: String, rank: Long, v: Double)
   *    most `maxBufferedPerGroup`.
   *  - FEW HUGE groups (the 100 TB shape: 3 return-flags × 10^10 rows):
   *    that buffer grows linearly with the group and OOMs an executor.
-  *    [[groupedQuantilesExact]] instead range-partitions the per-(group,
-  *    value) histogram, prefix-sums partition subtotals on the driver
-  *    (O(#groups × #partitions) — aggregate-sized in this regime), and
-  *    has each partition emit the order statistics whose global rank
-  *    falls inside it. Every stage is parallel in the number of range
-  *    partitions; per-executor memory is bounded by partition size, not
-  *    group size — the same construction as TableOne.exactQuartiles,
-  *    generalized to arbitrary p and interpolation.
+  *    [[groupedQuantilesExact]] instead runs the per-(group, value)
+  *    histogram through [[graft.tableone.RangePrefix.withRangePrefix]]
+  *    (partition subtotals prefix-summed on the driver: O(#groups ×
+  *    #partitions), aggregate-sized in this regime) and has each
+  *    partition emit the order statistics whose global rank falls inside
+  *    it. Every stage is parallel in the number of range partitions;
+  *    per-executor memory is bounded by partition size, not group size —
+  *    TableOne.exactQuartiles' pass, generalized to arbitrary p and
+  *    interpolation.
   *
   * The pathological corpus with BOTH 10^6+ groups and a multi-billion-row
   * group would make the exact path's driver bookkeeping large; route such
@@ -101,37 +104,12 @@ object Quantiles {
     val vals = df.select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast(DoubleType).as("v"))
       .filter(col("v").isNotNull)
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // histPre cached: repartitionByRange samples its child for range
-    // boundaries before the real shuffle — uncached, the histogram
-    // aggregation would run twice. hist cached: the subtotal pass and
-    // the pick pass are two separate actions over the range-shuffled
-    // result, and AQE replans each — the cache is what guarantees the
-    // range shuffle happens once. Both released in finally.
-    val histPre = vals.groupBy("g", "v").agg(count(lit(1)).as("cnt")).persist()
-    val hist = histPre
-      .repartitionByRange(nParts, col("g"), col("v"))
-      .sortWithinPartitions("g", "v")
-      .withColumn("pid", spark_partition_id())
-      .as[QHistRow]
-      .persist()
-    try {
-      val subtotals: Array[((Int, String), Long)] = hist
-        .groupBy("pid", "g").agg(sum("cnt").as("t"))
-        .collect()
-        .map(r => (r.getAs[Int]("pid"), r.getAs[String]("g")) -> r.getAs[Long]("t"))
-      // driver prefix sums in pid order: the starting global rank offset
-      // of every (pid, group), plus each group's total n
-      val off = Map.newBuilder[(Int, String), Long]
-      val totB = Map.newBuilder[String, Long]
-      subtotals.groupBy(_._1._2).foreach { case (g, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1._1).foreach { case ((pid, _), t) =>
-          off += ((pid, g) -> acc); acc += t
-        }
-        totB += (g -> acc)
-      }
-      val offsets = off.result(); val totals = totB.result()
+    val census = vals.groupBy("g", "v").agg(count(lit(1)).as("cnt"))
+    RangePrefix.withRangePrefix(census, Seq("g", "v"), groups = Seq("g"))(
+        sum("cnt").as("cnt")) { pass =>
+      // the starting global rank offset of every (pid, group), plus each
+      // group's total n
+      val (offsets, totals) = pass.offsets("cnt")(_.getAs[String]("g"))
       // ranks to fish out per group: for each p, the 1-indexed order
       // statistics bracketing position p·(n−1) — floor+1 always,
       // floor+2 when the position has a fractional part
@@ -142,11 +120,11 @@ object Quantiles {
           if (r == math.floor(r)) Seq(lo) else Seq(lo, lo + 1)
         }.distinct.sorted.toArray
       }
-      val picks: Array[QPick] = hist.mapPartitions { it =>
+      val picks: Array[QPick] = pass.parts.as[QHistRow].mapPartitions { it =>
         val out = scala.collection.mutable.ArrayBuffer.empty[QPick]
         val cum = scala.collection.mutable.Map.empty[String, Long]
         it.foreach { h =>
-          val before = cum.getOrElse(h.g, offsets.getOrElse((h.pid, h.g), 0L))
+          val before = cum.getOrElse(h.g, offsets.getOrElse((h.__pid, h.g), 0L))
           val after = before + h.cnt
           cum(h.g) = after
           val ranks = ranksByGroup.getOrElse(h.g, Array.empty[Long])
@@ -164,9 +142,9 @@ object Quantiles {
       // null group key (a null stratum is a legitimate group) sorts last
       val groupsSorted = totals.keys.toSeq.filter(_ != null).sorted ++
         totals.keys.toSeq.filter(_ == null)
-      // a missed pick means the pick pass's partition-id contract broke
-      // (e.g. the cached range shuffle was recomputed with different
-      // boundaries) — fail with the group/rank, not a bare map miss
+      // a missed pick means the pass's partition-id contract broke (the
+      // range shuffle was recomputed with different boundaries) — fail
+      // with the group/rank, not a bare map miss
       def pick(g: String, rank: Long): Double = vmap.getOrElse((g, rank),
         throw new IllegalStateException(
           s"groupedQuantilesExact: pick pass emitted no value for group " +
@@ -192,7 +170,7 @@ object Quantiles {
       spark.createDataFrame(
         new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
         schema)
-    } finally { hist.unpersist(); histPre.unpersist() }
+    }
   }
 
   /** Winsorization: clamp `valueCol` into its per-group exact
@@ -468,11 +446,14 @@ object Quantiles {
     // prefix sum gives each bucket's starting offset inside its tie
     // group, and the per-row row_number runs keyed (feature, value,
     // bucket) — parallelism bounded by bucket width, not value
-    // frequency. For a fully-castable id column, bucketing is a
+    // frequency. For a natively numeric id column, bucketing is a
     // monotone map of `id`, so
     //   offset(bucket) + row_number within bucket  ==  row_number within
     // the whole (feature, value) tie group ordered by id — bit-identical
     // to the window it replaces (spec-pinned partition-independence).
+    // A STRING id column that casts cleanly gets a deterministic tie
+    // order that is NOT pure orderBy(id): numeric across buckets,
+    // lexicographic within one (the row_number orders the raw id).
     // A fully-UNcastable id column yields null bounds and collapses to
     // ONE bucket = exactly the old plan. MIXED castability is the one
     // case that deviates from pure orderBy(id) tie order: uncastable

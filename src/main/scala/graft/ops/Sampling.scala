@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.tableone.RangePrefix
 
 /** Deterministic sampling / splitting for training-data pipelines.
   *
@@ -783,11 +784,10 @@ object Sampling {
     * padded_tokens, pad_waste) — quantifies exactly how much compute
     * the sort buys before anyone changes the loader.
     *
-    * Scale shape: each strategy's global rank comes from range
-    * partitions + per-partition row_number + ≤#partitions driver
-    * prefix offsets (the [[graft.sources.Sinks.exportJsonlSharded]]
-    * construction — never a single-partition window); batch = rank div
-    * batchSize, per-batch stats fold map-side, and BOTH final rows are
+    * Scale shape: each strategy's global rank is a per-partition
+    * row_number plus its partition's offset from the shared range pass
+    * ([[RangePrefix.withRangePrefix]] — never a single-partition
+    * window); batch = rank div batchSize, per-batch stats fold map-side, and BOTH final rows are
     * collected inside the persist scope (aggregates-only), so the
     * returned frame is a literal lift. Ranks are total orders ((len,
     * id) and (id), id unique), so the report is deterministic. */
@@ -795,42 +795,30 @@ object Sampling {
                         batchSize: Int): DataFrame = {
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     val spark = df.sparkSession
-    val nParts = spark.sessionState.conf.numShufflePartitions
     val base = df
       .filter(col(idCol).isNotNull && col(lenCol).isNotNull)
       .select(col(idCol).as("__id"), col(lenCol).cast("long").as("__len"))
-    def strategy(tag: String, keys: Seq[Column]): (String, Long, Long, Long, Long) = {
-      val parts = base
-        .repartitionByRange(nParts, keys: _*)
-        .sortWithinPartitions(keys: _*)
-        .withColumn("__pid", spark_partition_id())
-        .persist()
-      try {
-        val subtotals = parts.groupBy("__pid").agg(count(lit(1)).as("c"))
-          .collect().map(r => (r.getAs[Int]("__pid"), r.getAs[Long]("c")))
-          .sortBy(_._1)
-        if (subtotals.isEmpty) return (tag, 0L, 0L, 0L, 0L)
-        val off = subtotals.scanLeft(0L)(_ + _._2).init
-        val offMap = map(subtotals.indices.flatMap(i =>
-          Seq(lit(subtotals(i)._1), lit(off(i)))): _*)
-        val w = Window.partitionBy("__pid").orderBy(keys.map(_.asc): _*)
-        val r = parts
-          .withColumn("__r",
-            row_number().over(w).cast("long") +
-              coalesce(element_at(offMap, col("__pid")), lit(0L)) - 1)
-          .withColumn("__b", expr(s"__r div ${batchSize}L"))
-          .groupBy("__b")
-          .agg(count(lit(1)).as("bn"), max("__len").as("bmax"),
-            sum("__len").as("bsum"))
-          .agg(count(lit(1)).as("nb"), sum("bn").as("nd"),
-            sum(col("bmax") * col("bn")).as("padded"), sum("bsum").as("toks"))
-          .head()
-        (tag, r.getLong(1), r.getLong(0), r.getLong(3), r.getLong(2))
-      } finally parts.unpersist()
-    }
+    // base is a row-sized projection, not an aggregate: left uncached
+    def strategy(tag: String, keys: Seq[String]): (String, Long, Long, Long, Long) =
+      RangePrefix.withRangePrefix(base, keys, cacheCensus = false)(count(lit(1)).as("c")) { pass =>
+        if (pass.subtotals.isEmpty) (tag, 0L, 0L, 0L, 0L)
+        else {
+          val r = pass.parts
+            .withColumn("__r",
+              row_number().over(pass.inPartition).cast("long") + pass.offset("c") - 1)
+            .withColumn("__b", expr(s"__r div ${batchSize}L"))
+            .groupBy("__b")
+            .agg(count(lit(1)).as("bn"), max("__len").as("bmax"),
+              sum("__len").as("bsum"))
+            .agg(count(lit(1)).as("nb"), sum("bn").as("nd"),
+              sum(col("bmax") * col("bn")).as("padded"), sum("bsum").as("toks"))
+            .head()
+          (tag, r.getLong(1), r.getLong(0), r.getLong(3), r.getLong(2))
+        }
+      }
     val rows = Seq(
-      strategy("arrival_order", Seq(col("__id"))),
-      strategy("length_sorted", Seq(col("__len"), col("__id"))))
+      strategy("arrival_order", Seq("__id")),
+      strategy("length_sorted", Seq("__len", "__id")))
       .map { case (tag, nd, nb, toks, padded) =>
         (tag, nd, nb, toks, padded,
           if (padded > 0) Some(1.0 - toks.toDouble / padded) else None)

@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.tableone.RangePrefix
 
 /** Partitioned-layout sinks: Hive-style `partitionBy` parquet with the
   * small-files hazard designed out.
@@ -147,12 +147,11 @@ object Sinks {
     * whose running token total BEFORE it is `p` lands in shard
     * `p div tokensPerShard` — shards meet the budget exactly except for
     * the one overshooting document at each boundary. The running total
-    * never materializes a global single-partition window: rows are
-    * range-partitioned on `orderCol`, each partition cumulates locally,
-    * and ≤ #partitions driver prefix offsets stitch the global sum (the
-    * [[graft.ops.Quantiles.groupedQuantilesExact]] /
-    * `Drift.ksStatistic` construction). With `tokensPerShard <= 0` the
-    * budget derives from the corpus itself as
+    * never materializes a global single-partition window: it is a
+    * running sum of the shared range pass on `orderCol`
+    * ([[RangePrefix.withRangePrefix]]: each partition cumulates locally,
+    * and ≤ #partitions driver prefix offsets stitch the global sum).
+    * With `tokensPerShard <= 0` the budget derives from the corpus itself as
     * max(`minShardTokens`, totalTokens div `targetShards`) — the total
     * is free off the same subtotals the offsets need.
     *
@@ -177,7 +176,7 @@ object Sinks {
       }) {
       (sharded, _, budget) =>
         val spark = df.sparkSession
-        sharded.drop("__tok", "__pid", "__prev")
+        sharded.drop("__tok", RangePrefix.Pid, "__prev")
           .repartition(col("shard"))
           .write.mode("overwrite").partitionBy("shard").json(path)
         val census = sharded.groupBy("shard")
@@ -198,61 +197,46 @@ object Sinks {
   }
 
   /** Shared shard-assignment core for the batch export and the streaming
-    * micro-batch export: range-partition on `orderCol`, per-partition
-    * local token cumsum + ≤ #partitions driver prefix offsets (never a
-    * global single-partition window), then
+    * micro-batch export: the running token total before each row comes
+    * from [[RangePrefix.withRangePrefix]] on `orderCol` (never a global
+    * single-partition window), then
     * shard = (startOffsetTokens + global-prev) div budget. The frame
-    * handed to `use` carries (__tok, __pid, __prev, shard) and is
-    * persisted for its two consumers (writer + census); both persists
-    * release before return. `budgetOf` sees the input's total tokens so
-    * the batch export can derive its budget from the corpus. */
+    * handed to `use` carries (__tok, [[RangePrefix.Pid]], __prev, shard)
+    * and is persisted for its two consumers (writer + census); every
+    * persist releases before return. `budgetOf` sees the input's total
+    * tokens so the batch export can derive its budget from the corpus. */
   private def withShards[T](df: DataFrame, orderCol: String, tokenCol: String,
                             startOffsetTokens: Long, budgetOf: Long => Long)
                            (use: (DataFrame, Long, Long) => T): T = {
-    val spark = df.sparkSession
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val parts = df
-      .withColumn("__tok", col(tokenCol).cast("long"))
-      .repartitionByRange(nParts, col(orderCol))
-      .sortWithinPartitions(orderCol)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    try {
+    // the census is the corpus itself (one row per document): left
+    // uncached, so the range sampler re-reads it rather than holding a copy
+    val census = df.withColumn("__tok", col(tokenCol).cast("long"))
+    RangePrefix.withRangePrefix(census, Seq(orderCol), cacheCensus = false)(
+        sum("__tok").as("__tok"), count(lit(1)).as("n"),
+        count(col("__tok")).as("n_tok")) { pass =>
       // null gate, same pass as the subtotals: a null/uncastable token
       // count would otherwise unbox to a 0 subtotal and flow into
       // shards with zero budget weight — the manifest n_tokens goes
       // null and the budget silently undercounts. An EXPORT must fail
       // loudly, not drop or zero-weight rows.
-      val subtotalRows = parts.groupBy("__pid")
-        .agg(sum("__tok").as("t"), count(lit(1)).as("n"),
-          count(col("__tok")).as("n_tok")).collect()
-      val nNull = subtotalRows.map(r =>
-        r.getAs[Long]("n") - r.getAs[Long]("n_tok")).sum
+      val nNull = pass.total("n") - pass.total("n_tok")
       require(nNull == 0L,
         s"jsonl export: $nNull rows have null/uncastable $tokenCol — " +
           "filter or repair them upstream; an export must not carry zero-weight rows")
-      val subtotals = subtotalRows
-        .map(r => (r.getAs[Int]("__pid"), r.getAs[Long]("t"))).sortBy(_._1)
-      val total = subtotals.map(_._2).sum
+      val total = pass.total("__tok")
       // total == 0 is LEGAL here (zero-token docs still shard at a fixed
       // budget — the streaming path must not poison-pill on an all-zero
       // micro-batch); the batch export keeps its corpus-level total > 0
       // sanity gate at its own call site
       val budget = budgetOf(total)
       require(budget > 0, s"jsonl export: shard budget must be positive, got $budget")
-      val off = subtotals.scanLeft(0L)(_ + _._2).init
-      val offMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(off(i)))): _*)
-      val w = Window.partitionBy("__pid").orderBy(orderCol)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val sharded = parts
+      val sharded = pass.parts
         .withColumn("__prev",
-          coalesce(sum("__tok").over(w), lit(0L)) +
-            element_at(offMap, col("__pid")) + lit(startOffsetTokens))
+          pass.runningSum("__tok") - col("__tok") + lit(startOffsetTokens))
         .withColumn("shard", expr(s"__prev div ${budget}L"))
         .persist()
       try use(sharded, total, budget) finally sharded.unpersist()
-    } finally parts.unpersist()
+    }
   }
 
   /** One micro-batch of the STREAMING JSONL export — the o15 handoff's
@@ -294,7 +278,7 @@ object Sinks {
         }
       withShards(batch, orderCol, tokenCol, startOffsetTokens = carried,
         budgetOf = _ => tokensPerShard) { (sharded, total, _) =>
-        sharded.drop("__tok", "__pid", "__prev")
+        sharded.drop("__tok", RangePrefix.Pid, "__prev")
           .repartition(col("shard"))
           .write.mode("overwrite").partitionBy("shard")
           .json(s"$path/batch=$batchId")

@@ -24,11 +24,6 @@ object Sanitize {
     graft.functions.HashFunctions.sanitizeStrat(
       coalesce(c.cast("string"), lit(Missing)))
 
-  /** Driver-side equivalent for already-collected raw values. */
-  def stratValue(v: Any): String =
-    if (v == null) Missing
-    else v.toString.replace(" ", "_").replaceAll("[^\\x00-\\x7F]+", "?")
-
   /** Stratum display order: alphabetical, except "Yes" then "No" first and
     * "MISSING" last (/root/reference/tableone_pyspark.py:100-115 — the
     * prepend loop over a sorted list yields [Yes, No, rest..., MISSING]).

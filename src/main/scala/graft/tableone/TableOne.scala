@@ -17,22 +17,9 @@ import scala.jdk.CollectionConverters._
   *                 repeated variable labels, underscores -> spaces
   * @param pValues  attach t-test / ANOVA / chi-square results (stratified
   *                 runs only; forced off otherwise)
-  * @param approxQuantileAccuracy None (default): quartiles are EXACT at
-  *                 any scale — small columns (see quartileSketchMaxRows)
-  *                 via one `percentile_approx(4n)` job (exact while
-  *                 accuracy >= 4n), large ones via the distributed
-  *                 order-statistics pass ([[TableOne.exactQuartiles]]).
-  *                 Some(a): force a fixed-accuracy sketch inside the
-  *                 rollup — bounded memory independent of value
-  *                 cardinality, exact only while rows <= a/4. The
-  *                 reference uses rowcount+1 accuracy
-  *                 (/root/reference/tableone_pyspark.py:384-388):
-  *                 unbounded sketch memory AND a single-threaded
-  *                 final-stage merge that dominated our sf1 bench — the
-  *                 fixed sketch is the escape hatch here, not the default.
   * @param quartileSketchMaxRows exact-quartile path selector: when every
   *                 analyzed continuous column has at most this many
-  *                 non-null rows (known free from the pass-1 rollup —
+  *                 non-null rows (known free from the pass-1 aggregate —
   *                 choosing costs zero extra jobs), quartiles come from a
   *                 single `percentile_approx` rollup with accuracy = 4n,
   *                 which retains all n samples and is therefore exact;
@@ -54,12 +41,6 @@ import scala.jdk.CollectionConverters._
   *                 Int.MaxValue/4 (percentile_approx's accuracy limit),
   *                 and when every continuous value is null neither job
   *                 runs — there is nothing to rank.
-  * @param cacheInput persist the input for the duration of the (up to 4)
-  *                 in-call aggregation passes — worth it when `df` is an
-  *                 expensive upstream computation rather than a bare
-  *                 scan. Released before summarize returns (no residual
-  *                 executor storage); the returned plan re-scans the
-  *                 input once when consumed.
   * @param maxStrata hard cap on distinct stratification values. Each
   *                 stratum becomes TWO output columns and one collected
   *                 driver row, so an unbounded high-cardinality stratify
@@ -69,11 +50,11 @@ import scala.jdk.CollectionConverters._
   */
 /** One histogram row in [[TableOne.exactQuartiles]]'s range-partitioned
   * pass: (col position, stratum position, value, count, range-partition
-  * id). Both group identifiers are SMALL INTS, not names — a string in
-  * the melt's hash-aggregate grouping key knocks the aggregation off its
-  * vectorized fast path (measured ~5x slower at sf1); names are restored
-  * on the driver from the positions. */
-private[tableone] case class HistRow(c: Int, si: Int, v: Double, cnt: Long, pid: Int)
+  * id, named [[RangePrefix.Pid]]). Both group identifiers are SMALL INTS,
+  * not names — a string in the melt's hash-aggregate grouping key knocks
+  * the aggregation off its vectorized fast path (measured ~5x slower at
+  * sf1); names are restored on the driver from the positions. */
+private[tableone] case class HistRow(c: Int, si: Int, v: Double, cnt: Long, __pid: Int)
 
 /** One emitted quartile pick from [[TableOne.exactQuartiles]]: `k` =
   * 1/2/3 (25/50/75th percentile), `tot` marks the grand-total group. */
@@ -84,9 +65,7 @@ final case class TableOneConfig(
     cols: Seq[String] = Nil,
     beautify: Boolean = false,
     pValues: Boolean = false,
-    approxQuantileAccuracy: Option[Int] = None,
     quartileSketchMaxRows: Long = 400000L,
-    cacheInput: Boolean = false,
     maxStrata: Int = 1000)
 
 /** "Table 1" descriptive-statistics engine — a from-scratch Scala Spark
@@ -103,15 +82,14 @@ final case class TableOneConfig(
   * Execution design (vs the reference's >=10 jobs per continuous column,
   * SURVEY.md §3.5): at most THREE distributed passes regardless of column
   * count or stratification —
-  *   1. ONE `rollup(strat).agg` whose grand-total row carries the total
-  *      count + every continuous column's non-quantile stats and whose
-  *      per-stratum rows carry the stratum counts, stats, and the
-  *      (n, mean, var_samp) moments that feed the t-test/ANOVA,
-  *   2. ONE exact-quartile job for ALL continuous columns at once
-  *      (value-histogram + ordered window — fully parallel, no sketch,
-  *      no single-reducer merge; skipped when there are no continuous
-  *      columns or when `approxQuantileAccuracy` opts into the in-rollup
-  *      sketch),
+  *   1. ONE `groupBy(strat).agg` whose per-stratum rows carry the
+  *      stratum counts, every continuous column's non-quantile stats, and
+  *      the (n, mean, var_samp) moments that feed the t-test/ANOVA; the
+  *      grand-total row is combined from them on the driver,
+  *   2. ONE exact-quartile job for ALL continuous columns at once (an
+  *      exact-accuracy sketch for small columns, the distributed
+  *      order-statistics pass above `quartileSketchMaxRows`; skipped
+  *      when there are no continuous columns),
   *   3. ONE melt + `groupBy(variable, value)` aggregation for ALL
   *      categorical columns (explicit per-stratum conditional counts — no
   *      pivot distinct-value job),
@@ -139,16 +117,13 @@ object TableOne {
     *   1. melt -> groupBy (col, stratum, value).count — ONE shuffle with
     *      map-side combine; the histogram is the data's distinct-value
     *      footprint, never bigger than the input.
-    *   2. `repartitionByRange(col, value)` + in-partition sort. Partition
-    *      assignment is a pure function of the key, so all strata rows of
-    *      one (col, value) — and all its duplicates — land in ONE
-    *      partition, in global (col, value) order across partitions.
-    *   3. Per-partition subtotals per (col, stratum) — a tiny aggregate
-    *      (partitions x cols x strata rows) collected to the driver,
-    *      prefix-summed into per-partition starting offsets, and the
-    *      grand totals n(col, stratum) / n(col) that fix the target
-    *      ranks. A few KB regardless of data size.
-    *   4. ONE sorted `mapPartitions` pass: running cumulative counts
+    *   2. [[RangePrefix.withRangePrefix]] on (col, value): all strata
+    *      rows of one (col, value) land in ONE partition, in global
+    *      (col, value) order; per-(partition, col, stratum) subtotals —
+    *      partitions x cols x strata rows, a few KB regardless of data
+    *      size — give the starting offsets and the grand totals
+    *      n(col, stratum) / n(col) that fix the target ranks.
+    *   3. ONE sorted `mapPartitions` pass: running cumulative counts
     *      seeded from the offsets; a row (or value-group, for the
     *      cross-strata total) whose cumulative count CROSSES a target
     *      rank emits that pick. Output: at most 3 rows per group.
@@ -191,53 +166,20 @@ object TableOne {
       case None => working.select(lit(0).as("si"), posexplode(kvs).as(Seq("c", "v")))
     }).select(col("si"), col("c"), col("v"))
       .filter(col("v").isNotNull)
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // Both persists last for the duration of this call only (released in
-    // `finally` — no residual storage). `histPre` is cached because
-    // `repartitionByRange` runs a boundary-SAMPLING job over its child
-    // before the real shuffle: uncached, the whole melt+combine would
-    // execute twice. `hist` is cached because the subtotal pass and the
-    // pick pass are two separate jobs over the range-shuffled result, and
-    // AQE replans each action — the cache, not exchange reuse, is what
-    // guarantees the range shuffle happens once.
-    val histPre = melted.groupBy("c", "si", "v").agg(count(lit(1)).as("cnt")).persist()
-    val hist = histPre
-      .repartitionByRange(nParts, col("c"), col("v"))
-      .sortWithinPartitions("c", "v")
-      .withColumn("pid", spark_partition_id())
-      .as[HistRow]
-      .persist()
-    try {
-      // Per-stratum bookkeeping is pure overhead when there are no strata
-      // (every row would re-derive the grand-total picks a second time).
-      val withStrata = stratify.isDefined
-      val subtotals: Array[((Int, Int, Int), Long)] = hist
-        .groupBy("pid", "c", "si").agg(sum("cnt").as("t"))
-        .collect()
-        .map(r => (r.getAs[Int]("pid"), r.getAs[Int]("c"), r.getAs[Int]("si")) -> r.getAs[Long]("t"))
-      // Driver-side prefix sums over pid order: starting offsets for every
-      // (pid, col, stratum) and (pid, col), plus the grand totals that fix
-      // the six target ranks per group. All tiny.
-      val byStrat = subtotals.groupBy { case ((_, c, si), _) => (c, si) }
-      val byCol = subtotals.groupBy { case ((_, c, _), _) => c }
-      def offsets[K](m: Map[K, Array[((Int, Int, Int), Long)]]): (Map[(Int, K), Long], Map[K, Long]) = {
-        val off = Map.newBuilder[(Int, K), Long]
-        val tot = Map.newBuilder[K, Long]
-        m.foreach { case (k, rows) =>
-          var acc = 0L
-          rows.groupBy(_._1._1).toSeq.sortBy(_._1).foreach { case (pid, prs) =>
-            off += ((pid, k) -> acc); acc += prs.map(_._2).sum
-          }
-          tot += (k -> acc)
-        }
-        (off.result(), tot.result())
-      }
-      val (stratOff, stratN) = offsets(byStrat)
-      val (colOff, colN) = offsets(byCol)
+    // Per-stratum bookkeeping is pure overhead when there are no strata
+    // (every row would re-derive the grand-total picks a second time).
+    val withStrata = stratify.isDefined
+    val census = melted.groupBy("c", "si", "v").agg(count(lit(1)).as("cnt"))
+    RangePrefix.withRangePrefix(census, Seq("c", "v"), groups = Seq("c", "si"))(
+        sum("cnt").as("cnt")) { pass =>
+      // starting offsets for every (pid, col, stratum) and (pid, col),
+      // plus the grand totals that fix the six target ranks per group
+      val (stratOff, stratN) = pass.offsets("cnt")(t => (t.getAs[Int]("c"), t.getAs[Int]("si")))
+      val (colOff, colN) = pass.offsets("cnt")(_.getAs[Int]("c"))
       def ranks(n: Long): Array[Long] = Array(1L, 2L, 3L).map(k => (k * n + 3) / 4)
       val stratRanks = stratN.map { case (k, n) => k -> ranks(n) }
       val colRanks = colN.map { case (c, n) => c -> ranks(n) }
-      val picks = hist.mapPartitions { it =>
+      val picks = pass.parts.as[HistRow].mapPartitions { it =>
         val out = scala.collection.mutable.ArrayBuffer.empty[Pick]
         val cumS = scala.collection.mutable.Map.empty[(Int, Int), Long]
         val cumC = scala.collection.mutable.Map.empty[Int, Long]
@@ -253,7 +195,7 @@ object TableOne {
           // per-stratum crossing (hist rows are unique per (c, si, v))
           if (withStrata) {
             val sk = (h.c, h.si)
-            val before = cumS.getOrElse(sk, stratOff.getOrElse((h.pid, sk), 0L))
+            val before = cumS.getOrElse(sk, stratOff.getOrElse((h.__pid, sk), 0L))
             val after = before + h.cnt
             cumS(sk) = after
             stratRanks(sk).zipWithIndex.foreach { case (r, i) =>
@@ -264,7 +206,7 @@ object TableOne {
           if (h.c != gc || h.v != gv) {
             flushGroup()
             gc = h.c; gv = h.v
-            gBefore = cumC.getOrElse(h.c, colOff.getOrElse((h.pid, h.c), 0L))
+            gBefore = cumC.getOrElse(h.c, colOff.getOrElse((h.__pid, h.c), 0L))
             gAfter = gBefore
           }
           gAfter += h.cnt
@@ -282,7 +224,7 @@ object TableOne {
         key.foreach(k => m.getOrElseUpdate(k, Array.fill(3)(Double.NaN))(p.k - 1) = p.v)
       }
       m.toMap
-    } finally { hist.unpersist(); histPre.unpersist() }
+    }
   }
 
   /** Small-column quartiles: one `percentile_approx` rollup job with
@@ -375,8 +317,7 @@ object TableOne {
     * per-stratum (n, mean, M2 = var*(n-1)) with the Chan/Welford update.
     * n=1 strata contribute M2=0 (Spark reports their var_samp as NaN,
     * but a single point has zero spread); the combined var/stddev is NaN
-    * at total n=1, matching var_samp/stddev_samp on the raw rows. Fields
-    * this mode never aggregates (the opt-in sketch's #q) stay null. */
+    * at total n=1, matching var_samp/stddev_samp on the raw rows. */
   private def combineTotalRow(stratRows: Seq[Row], contCols: Seq[String]): Row = {
     val schema = stratRows.head.schema
     def num(r: Row, f: String): Option[Double] = r.getAs[Any](f) match {
@@ -460,16 +401,10 @@ object TableOne {
     // Variable position in the output (1-based; 0 is the Totals row).
     val varIdx: Map[String, Int] = analyzed.map(_._1).zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
 
-    val working = if (cfg.cacheInput) df.persist() else df
-
-    // --- pass 1: ONE rollup aggregation job yields the global row
-    // (rollup grand total: total count + every continuous column's
-    // overall stats) AND, when stratified, each stratum's row count +
-    // stats + the (n, mean, var) test moments. The sanitized strat value
-    // is never null, so grouping() unambiguously marks the total row.
-    // Quartiles ride in this job ONLY in the opt-in sketch mode; the
-    // default exact path computes them in their own fully-parallel job
-    // (see exactQuartiles below) because a high-accuracy sketch's
+    // --- pass 1: ONE aggregation job yields the global row (total
+    // count + every continuous column's overall stats) AND, when
+    // stratified, each stratum's row count + stats + the (n, mean, var)
+    // test moments. Quartiles never ride in this job: a high-accuracy sketch's
     // final-stage merge is single-threaded per group and dominated the
     // whole summary at sf1 (6M rows: 99 s of a 3 s query's work).
     def statExprs(withMoments: Boolean): Seq[Column] = contCols.flatMap { c =>
@@ -478,10 +413,7 @@ object TableOne {
         min(col(c)).cast(DoubleType).as(s"$c#min"),
         max(col(c)).cast(DoubleType).as(s"$c#max"),
         avg(col(c)).as(s"$c#mean"),
-        stddev(col(c)).as(s"$c#stddev")) ++
-        cfg.approxQuantileAccuracy.map(a =>
-          percentile_approx(col(c), array(lit(0.25), lit(0.5), lit(0.75)), lit(a.toLong))
-            .cast(ArrayType(DoubleType)).as(s"$c#q"))
+        stddev(col(c)).as(s"$c#stddev"))
       if (withMoments)
         base ++ Seq(var_samp(col(c)).as(s"$c#var"),
           sum(col(c)).cast(DoubleType).as(s"$c#sum"))
@@ -494,16 +426,16 @@ object TableOne {
         "each stratum becomes two output columns — raise maxStrata only if that is intended")
     val (globalRow: Row, strata: Seq[Stratum]) = cfg.stratify match {
       case None =>
-        val g = working.agg(count(lit(1)).as("#rows"), statExprs(withMoments = false): _*).head()
+        val g = df.agg(count(lit(1)).as("#rows"), statExprs(withMoments = false): _*).head()
         (g, Nil)
-      case Some(s) if cfg.approxQuantileAccuracy.isEmpty =>
-        // Default mode: ONE aggregate row per stratum, and the grand
+      case Some(s) =>
+        // ONE aggregate row per stratum, and the grand
         // total combined on the driver (counts/sums add, extrema reduce,
         // variances merge with the Chan/Welford update). A rollup would
         // feed every input row into TWO grouping sets — measured 3.5 s
         // vs 1.6 s for this pass at sf1 — to produce a total the driver
         // derives from a handful of stratum rows for free.
-        val rows = working
+        val rows = df
           .withColumn(StratCol, Sanitize.stratColumn(col(s)))
           .groupBy(col(StratCol))
           .agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*)
@@ -511,7 +443,7 @@ object TableOne {
           .collect()
         maxStrataGuard(rows.length)
         if (rows.isEmpty) // empty input: zero total, no strata
-          (working.agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*).head(), Nil)
+          (df.agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*).head(), Nil)
         else {
           val byName = rows.map(r => r.getAs[String](StratCol) -> r).toMap
           val ordered = Sanitize.orderStrata(byName.keys.toSeq)
@@ -521,39 +453,19 @@ object TableOne {
               Stratum(name, r.getAs[Long]("#rows"), r)
             })
         }
-      case Some(s) =>
-        // Opt-in sketch mode: the quartile sketches ride this pass and
-        // the total group's sketch cannot be combined from per-stratum
-        // results on the driver, so this mode keeps the rollup.
-        // grouping() must reference the rollup column itself, not an
-        // alias, so sanitize in a projection first.
-        val rows = working
-          .withColumn(StratCol, Sanitize.stratColumn(col(s)))
-          .rollup(col(StratCol))
-          .agg(count(lit(1)).as("#rows"), statExprs(withMoments = true) :+
-            grouping(col(StratCol)).cast("int").as("#isTotal"): _*)
-          .limit(cfg.maxStrata + 2)
-          .collect()
-        maxStrataGuard(rows.length - 1)
-        val (totalRows, stratRows) = rows.partition(_.getAs[Int]("#isTotal") == 1)
-        val byName = stratRows.map(r => r.getAs[String](StratCol) -> r).toMap
-        (totalRows.head, Sanitize.orderStrata(byName.keys.toSeq).map { name =>
-          val r = byName(name)
-          Stratum(name, r.getAs[Long]("#rows"), r)
-        })
     }
     val total: Long = globalRow.getAs[Long]("#rows")
     val stratNames = strata.map(_.name)
     val globalStats: Option[Row] = if (contCols.isEmpty) None else Some(globalRow)
 
-    // --- pass 2 (default path): EXACT quartiles for every continuous
+    // --- pass 2: EXACT quartiles for every continuous
     // column and every stratum + the total. Pass 1 already fixed every
     // column's non-null count, so the path choice is free: small columns
     // ride one percentile_approx rollup at accuracy 4n (exact, state
     // bounded by the threshold); anything larger takes the fully-parallel
     // order-statistics job. Key: None = grand total, Some(s) = stratum.
     val quartMap: Map[(String, Option[String]), Array[Double]] =
-      if (contCols.isEmpty || cfg.approxQuantileAccuracy.isDefined) Map.empty
+      if (contCols.isEmpty) Map.empty
       else {
         val maxN = contCols.map(c => globalRow.getAs[Long](s"$c#n")).max
         // sketch eligibility is additionally capped at Int.MaxValue/4:
@@ -562,8 +474,8 @@ object TableOne {
         // order-statistics path instead of failing analysis
         if (maxN == 0L) Map.empty // every continuous value is null
         else if (maxN <= math.min(cfg.quartileSketchMaxRows, Int.MaxValue / 4L))
-          sketchQuartiles(working, cfg.stratify, contCols, 4L * maxN)
-        else exactQuartiles(working, cfg.stratify, stratNames, contCols)
+          sketchQuartiles(df, cfg.stratify, contCols, 4L * maxN)
+        else exactQuartiles(df, cfg.stratify, stratNames, contCols)
       }
 
     // --- output schema -------------------------------------------------
@@ -619,10 +531,7 @@ object TableOne {
       case "stddev" => numOpt(r, s"$c#stddev")
       case q =>
         val i = q.charAt(0) match { case '2' => 0; case '5' => 1; case '7' => 2 }
-        if (cfg.approxQuantileAccuracy.isDefined)
-          Option(r.getAs[scala.collection.Seq[Any]](s"$c#q"))
-            .flatMap(a => Option(a(i))).map(_.asInstanceOf[Number].doubleValue())
-        else quartMap.get((c, key)).map(_(i))
+        quartMap.get((c, key)).map(_(i))
     }
 
     val contRows: Seq[Row] = contCols.flatMap { c =>
@@ -659,8 +568,8 @@ object TableOne {
       val kvs = array(catCols.map(c =>
         struct(lit(c).as("variable"), coalesce(col(c).cast(StringType), lit(Missing)).as("Values"))): _*)
       val melted = cfg.stratify match {
-        case Some(s) => working.select(Sanitize.stratColumn(col(s)).as(StratCol), explode(kvs).as("kv"))
-        case None    => working.select(lit("").as(StratCol), explode(kvs).as("kv"))
+        case Some(s) => df.select(Sanitize.stratColumn(col(s)).as(StratCol), explode(kvs).as("kv"))
+        case None    => df.select(lit("").as(StratCol), explode(kvs).as("kv"))
       }
       val counts = melted
         .select(col(StratCol), col("kv.variable").as("variable"), col("kv.Values").as("Values"))
@@ -732,12 +641,6 @@ object TableOne {
 
     val unordered = catBlock.fold(driverBlock)(driverBlock.unionByName(_))
     val ordered = unordered.orderBy(col("Index"), col("Values"))
-
-    // cacheInput served the in-call aggregation passes (rollup, melt,
-    // p-value collects); release it before returning so no executor
-    // storage outlives the call — the returned plan's one consume
-    // re-scans the input instead.
-    if (cfg.cacheInput) working.unpersist()
 
     val finalDf =
       if (!cfg.beautify) ordered

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -305,6 +306,34 @@ class FileSkippingSpec extends AnyFunSuite with Matchers {
     // unknown column names fail with the schema in the message
     an[IllegalArgumentException] should be thrownBy
       FileSkipping.readEquals(spark, t, "nope", 1L)
+  }
+
+  test("an over-cap bloom build keeps the caller's runtime SQL confs") {
+    // a child session as the caller, so the shared test session's conf
+    // stays untouched; a tiny cap forces the raised-cap build session
+    val caller = spark.newSession()
+    val maxBitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    val markerKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    caller.conf.set(maxBitsKey, "1024")
+    caller.conf.set(markerKey, "7654321")
+    // each SQL job carries its session's spark.* confs as job properties
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val df = caller.createDataFrame((1 to 2000).map(i => (i.toLong, f"s$i%04d")))
+        .toDF("k", "s").repartition(2)
+      FileSkipping.commitWithBloom(df, tmp(), Seq("k"))
+      def buildJobs = seen.asScala.filter(p =>
+        Option(p.getProperty(maxBitsKey)).exists(_.toLong > 1024L))
+      val deadline = System.nanoTime() + 10000000000L
+      while (buildJobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      buildJobs should not be empty
+      buildJobs.map(_.getProperty(markerKey)).toSet shouldBe Set("7654321")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("bloom sidecar lines round-trip; append commits prune per directory") {
